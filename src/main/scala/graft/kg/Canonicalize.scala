@@ -25,17 +25,9 @@ import org.apache.spark.sql.functions._
 object Canonicalize {
 
   /** edges: (src, dst) string pairs, undirected. Returns
-    * (vertex, component) with component = min vertex id reachable. */
-  /** Edge-count threshold below which CC runs as driver-local
-    * union-find over the (already tiny) distinct edge set — the same
-    * adaptivity as a broadcast join: the distinct mention/entity graph
-    * is typically orders of magnitude smaller than the corpus, and
-    * the iterative loop's many small jobs would otherwise dominate.
-    * Above the threshold the distributed hash-min loop runs. */
-  val LocalEdgeThreshold: Long = 2L << 21 // ~4M edges ≈ a few hundred MB driver-side
-
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          forceDistributed: Boolean = false): DataFrame = {
+    * (vertex, component) with component = min vertex id reachable,
+    * computed by the distributed hash-min loop. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -50,34 +42,9 @@ object Canonicalize {
     // — NOT by mutating the session-global shuffle-partitions conf,
     // which would race against concurrent queries on the same session.
     val nEdges = sym.count()
-    if (nEdges <= LocalEdgeThreshold && !forceDistributed)
-      return connectedComponentsLocal(spark, sym)
     val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toLong
     val loopPartitions = math.max(4L, math.min(sessionWidth, nEdges / 100000L + 1)).toInt
     connectedComponentsLoop(sym.repartition(loopPartitions, col("src")), maxIter, loopPartitions)
-  }
-
-  /** Driver-local union-find over a collected small edge set; output
-    * schema identical to the distributed loop. */
-  private def connectedComponentsLocal(spark: org.apache.spark.sql.SparkSession,
-                                       sym: DataFrame): DataFrame = {
-    import spark.implicits._
-    val edges = sym.as[(String, String)].collect()
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb } // min-id root
-    }
-    val rows = parent.keys.toSeq.map(v => (v, find(v)))
-    spark.createDataset(rows).toDF("vertex", "component")
   }
 
   private def connectedComponentsLoop(sym: DataFrame, maxIter: Int,
@@ -145,6 +112,9 @@ object Canonicalize {
       .replaceAll("[^a-z0-9 ]", "")
       .trim
 
+  /** Edge count up to which [[canonicalMap]] runs driver-local. */
+  val LocalEdgeThreshold: Long = 2L << 21 // ~4M edges ≈ a few hundred MB driver-side
+
   /** mention→canonical-entity map from accepted links + alias edges.
     * Components that contain no catalogue entity id keep the mention
     * itself as canonical subject. Returns (member, canonical).
@@ -160,7 +130,11 @@ object Canonicalize {
       .toDF("src", "dst")
     val aliases = aliasEdges(catalogue)
       .select(concat(lit("e:"), col("src")).as("src"), concat(lit("e:"), col("dst")).as("dst"))
-    // bounded-probe collect picks the path in ONE job (the
+    // LocalEdgeThreshold works like a broadcast-join cutoff: the
+    // distinct mention/entity graph is typically orders of magnitude
+    // smaller than the corpus, and the distributed loop's many small
+    // jobs would otherwise dominate.
+    // The bounded-probe collect picks the path in ONE job (the
     // EntityLinking.link pattern, r6 — the r5 count-then-collect pair
     // cost an extra job per pipeline run): fetch at most threshold+1
     // rows; if the limit did not truncate, those rows ARE the full
@@ -178,13 +152,15 @@ object Canonicalize {
     } finally edges.unpersist()
   }
 
-  /** Driver-local union-find + canonical pick over a small edge set. */
-  def canonicalMapLocal(edges: Seq[(String, String)]): Seq[(String, String)] = {
+  /** Driver-local union-find over a small undirected edge set:
+    * vertex → min member of its component (the smaller root always
+    * wins a union, so each root is its component's min id). */
+  def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
+      var c = x // path compression
       while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
@@ -193,18 +169,22 @@ object Canonicalize {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    val members = parent.keys.toSeq
-    val byRoot = members.groupBy(find)
-    val canonical = byRoot.map { case (root, ms) =>
-      val entityIds = ms.collect { case m if m.startsWith("e:") => m.substring(2) }
-      root -> (if (entityIds.nonEmpty) entityIds.min else ms.min)
+    parent.keys.iterator.map(v => v -> find(v)).toMap
+  }
+
+  /** Driver-local union-find + canonical pick over a small edge set. */
+  def canonicalMapLocal(edges: Seq[(String, String)]): Seq[(String, String)] = {
+    val root = unionFind(edges)
+    val canonical = root.groupBy(_._2).map { case (r, ms) =>
+      val entityIds = ms.keys.collect { case m if m.startsWith("e:") => m.substring(2) }
+      r -> (if (entityIds.nonEmpty) entityIds.min else r) // r = min member
     }
-    members.map(m => m -> canonical(find(m)))
+    root.toSeq.map { case (m, r) => m -> canonical(r) }
   }
 
   /** Distributed CC + canonical aggregation (the big-graph path). */
   def canonicalMapDistributed(edges: DataFrame): DataFrame = {
-    val cc = connectedComponents(edges, forceDistributed = true)
+    val cc = connectedComponents(edges)
     // canonical per component: min entity id if any entity member, else min member
     val canon = cc.groupBy("component")
       .agg(

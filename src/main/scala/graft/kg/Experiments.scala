@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Experiment bookkeeping: the Spark re-expression of the reference's
   * ResultInstance store + leaderboard
-  * (ner/llm_ner/ResultInstance.py:63-145, plot_results.py:10-35) and
-  * the per-stage metrics table the north rule requires.
+  * (ner/llm_ner/ResultInstance.py:63-145, plot_results.py:10-35).
   */
 object Experiments {
 
@@ -134,60 +133,5 @@ object Experiments {
       } }), Duration.Inf).flatten
       spark.createDataset(scores)
     } finally { turns.unpersist(); gold.unpersist() }
-  }
-
-  /** Run the pipeline collecting per-stage row counts + wall times
-    * into StageMetric rows (north rule: every stage writes lineage +
-    * metrics). Each count is an extra action — use for audited runs,
-    * not the hot path. */
-  def runWithMetrics(spark: SparkSession, turns: Dataset[Turn],
-                     cfg: TranscriptGen.Config, runId: String): (KGPipeline.Result, Dataset[StageMetric]) = {
-    import spark.implicits._
-    val metrics = Vector.newBuilder[StageMetric]
-    def staged[T](stage: String, rowsIn: Long)(f: => (T, Long)): T = {
-      val t0 = System.nanoTime()
-      val (r, rowsOut) = f
-      metrics += StageMetric(runId, stage, rowsIn, rowsOut,
-        math.max(0L, rowsIn - rowsOut), (System.nanoTime() - t0) / 1000000L)
-      r
-    }
-
-    val nTurns = turns.count()
-    val prompts = staged("prompts", nTurns) {
-      val p = Extraction.buildPrompts(turns).cache(); (p, p.count())
-    }
-    val nPrompts = prompts.count()
-    val extracted = staged("extract", nPrompts) {
-      val e = Extraction.extractAll(Extraction.scoreMentions(prompts, cfg), cfg).cache()
-      (e, e.count())
-    }
-    val mentions = extracted.flatMap(e =>
-      e.parsed.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) })
-    val nMentions = mentions.count()
-    // verified is consumed by four actions below (verify count, link
-    // input, two materialize row counts) — count it ONCE over the
-    // cached extracted rows instead of re-running the flatMap per job
-    val verified = extracted.flatMap(e =>
-      e.verified.map { case (m, t) => Mention(e.conv_id, e.turn_idx, m, t) }).cache()
-    val nVerified = verified.count()
-    staged[Unit]("verify", nMentions) { ((), nVerified) }
-    val relations = extracted.flatMap(e =>
-      e.relations.map { case (s, p, o) => Relation(e.conv_id, e.turn_idx, s, p, o) })
-    val links = staged("link", nVerified) {
-      val l = EntityLinking.link(verified, Lexicon.catalogue.toArray).cache()
-      (l, l.count())
-    }
-    val canon = staged("canonicalize", links.count()) {
-      val c = Canonicalize.canonicalMap(links, TranscriptGen.entities(spark)).cache()
-      (c, c.count())
-    }
-    val triples = staged("materialize", nVerified + relations.count()) {
-      val t = KGPipeline.materializeTriples(verified, relations, canon)
-      (t, t.count())
-    }
-    verified.unpersist() // last action that reads it ran above
-    val result = KGPipeline.Result(turns, prompts, mentions, verified, relations,
-      links, canon, triples, extracted)
-    (result, spark.createDataset(metrics.result()))
   }
 }

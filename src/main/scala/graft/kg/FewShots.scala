@@ -173,12 +173,4 @@ object FewShots {
       .filter(col("rank") <= k)
       .select("query_id", "train_id", "sim", "rank")
   }
-
-  /** The memo effect of few_shots_save: score each distinct query
-    * text once, join results back to all occurrences. */
-  def withMemo[T](queries: DataFrame, textCol: String)(score: DataFrame => DataFrame): DataFrame = {
-    val distinctQ = queries.select(col(textCol)).distinct()
-    val scored = score(distinctQ)
-    queries.join(scored, Seq(textCol), "left_outer")
-  }
 }

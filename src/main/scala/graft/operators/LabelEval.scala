@@ -98,12 +98,6 @@ object LabelEval {
       .select("doc_id", "label_name", "output")
   }
 
-  /** get_results_by_label_name (testingLLMperformance.py:86-92). */
-  def resultsByLabel(scoreDf: DataFrame): DataFrame =
-    scoreDf.groupBy("label_name")
-      .agg(avg("output").as("mean_output"), count(lit(1)).as("count_values"))
-      .orderBy(col("count_values").desc)
-
   final case class Scores(byFields: Double, byDocuments: Double, nFields: Long)
 
   /** get_score_for_asked_fields (testingLLMperformance.py:104-112):

@@ -13,26 +13,23 @@ class CanonicalizeSpec extends AnyFunSuite {
     val edges = (0 until 350).map { _ =>
       (vertices(rnd.nextInt(vertices.length)), vertices(rnd.nextInt(vertices.length)))
     }.filter { case (a, b) => a != b }
-    val df = edges.toDF("src", "dst")
-    val local = Canonicalize.connectedComponents(df)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val dist = Canonicalize.connectedComponents(df, forceDistributed = true)
+    val local = Canonicalize.unionFind(edges)
+    val dist = Canonicalize.connectedComponents(edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(local == dist)
     assert(local.nonEmpty)
     // component label is the min member
-    local.groupBy(_._2).foreach { case (comp, members) =>
+    dist.groupBy(_._2).foreach { case (comp, members) =>
       assert(members.keys.min == comp)
     }
   }
 
   test("chain graph: long diameter converges") {
     import spark.implicits._
-    val chain = (0 until 40).map(i => (f"c$i%02d", f"c${i + 1}%02d")).toDF("src", "dst")
-    val local = Canonicalize.connectedComponents(chain)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val edges = (0 until 40).map(i => (f"c$i%02d", f"c${i + 1}%02d"))
+    val local = Canonicalize.unionFind(edges)
     assert(local.values.toSet == Set("c00"))
-    val dist = Canonicalize.connectedComponents(chain, forceDistributed = true, maxIter = 50)
+    val dist = Canonicalize.connectedComponents(edges.toDF("src", "dst"), maxIter = 50)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(dist == local)
   }
